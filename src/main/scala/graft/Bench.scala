@@ -158,35 +158,20 @@ object Bench {
       v >= 0 && base.get(shortName(name)).exists(b => v > 2.0 * b)
     }.map(_._1).toSet
 
+  /** File-index/footer warm-up per table: listing + schema are catalog
+    * work, not query work — the first measured query shouldn't pay them. */
+  private[graft] def warmTables(spark: SparkSession, sfDir: String): Unit =
+    Tables.All.foreach { t =>
+      try Tables.load(spark, sfDir, t).limit(1).write.format("noop").mode("overwrite").save()
+      catch { case _: Throwable => () }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Long-session hygiene (the round-6 "VM steal" mislabel, diagnosed):
-      // even with the UI off, AppStatusListener + SQLAppStatusListener feed
-      // an InMemoryStore that retains up to 1000 jobs / 1000 stages /
-      // 100k tasks / 1000 SQL executions WITH their full per-node metric
-      // maps — at 390+ deep plans that is driver-heap-scale garbage that
-      // inflates every late query (GC pressure, codegen cache eviction).
-      // Cap the retained state at diagnostic-useful sizes.
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "5000")
-      .config("spark.sql.ui.retainedExecutions", "30")
-      // ContextCleaner reclaims shuffle files / broadcasts / checkpointed
-      // RDD blocks only when the driver GC collects their weak refs; the
-      // default periodic-GC interval (30 min) never fires inside a bench
-      .config("spark.cleaner.periodicGC.interval", "120s")
-      .getOrCreate()
+    val spark = Runs.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // JVM/codegen warmup so the first measured query doesn't pay startup
-    spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
+    Runs.warm(spark)
     // Rig-throughput sentinel (round-9 item 3): the SAME noop aggregate,
     // re-run once WARM and timed. Unlike the single-thread spin loop (which
     // reads core contention only), this exercises the scheduler + codegen +
@@ -194,21 +179,9 @@ object Bench {
     // normalizable: total_r9/total_r8 ≈ rig_ms_r9/rig_ms_r8 means the rig
     // moved, not the engine. Recorded as `rig_ms` in the metric line.
     val rigT0 = System.nanoTime()
-    spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
+    Runs.warm(spark)
     val rigMs = (System.nanoTime() - rigT0) / 1e6
-    // file-index/footer warmup per table: listing + schema are catalog work,
-    // not query work — the first measured query shouldn't pay them either
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings").foreach { t =>
-      // events goes through its dedicated loader: the raw parquet is
-      // TIMESTAMP(NANOS), which the plain reader rejects — a raw warmup
-      // would throw (caught, but the table then stayed cold)
-      try {
-        val df = if (t == "events") Tables.events(spark, sfDir)
-                 else Tables.load(spark, sfDir, t)
-        df.limit(1).write.format("noop").mode("overwrite").save()
-      } catch { case _: Throwable => () }
-    }
+    warmTables(spark, sfDir)
 
     memSpinMs() // discard: first call pays 64 MiB allocation + page faults
     val spin0 = spinMs()
@@ -236,21 +209,13 @@ object Bench {
       // one, so the between-timers GC below must trigger on time spent,
       // not on the (-1.0-masked) result value
       val elapsed = (System.nanoTime() - t0) / 1e9
-      // Fresh-session hygiene between queries: operators that persist or
-      // localCheckpoint leave blocks pinned after their result is consumed;
-      // over 250+ queries the leak compounds into memory pressure that
-      // inflates every late-alphabet query (q22 measured 20 s inside a full
-      // run vs 3 s isolated before this). A real deployment runs one
-      // pipeline per session — the bench should charge each query its own
-      // work, not its predecessors' garbage. Locally-CHECKPOINTED RDDs are
-      // excluded: their blocks are the ONLY copy (no lineage to recompute),
-      // so a blanket unpersist would break any later reference and spams
-      // "cannot be recomputed" WARNs into the tail window — ContextCleaner
-      // frees them on the GC cadence below once their refs die.
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(_.isCheckpointed)
-        .foreach(_.unpersist(blocking = false))
+      // Fresh-session hygiene between queries (Runs.release): over 250+
+      // queries pinned blocks compound into memory pressure that inflates
+      // every late-alphabet query (q22 measured 20 s inside a full run vs
+      // 3 s isolated before this). A real deployment runs one pipeline per
+      // session — the bench charges each query its own work, not its
+      // predecessors' garbage.
+      Runs.release(spark)
       // explicit GC cadence: unpersisted/checkpointed blocks, shuffle state
       // and broadcasts are only RELEASED when ContextCleaner sees their
       // weak refs collected — without this the round-6 run degraded 2-5×

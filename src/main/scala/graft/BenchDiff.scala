@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query regression tripwire: diffs target/bench_full.json against
   * BENCH_BASELINE.md, prints every >2× row, and (unless `--no-remeasure`)
   * re-times each flagged query in a fresh idle session so a reader can
@@ -59,42 +57,24 @@ object BenchDiff {
     }
 
     if (flags("--no-remeasure")) return
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Runs.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
+    Runs.warm(spark)
     // same per-table warmup as Bench: without it the FIRST flagged query
     // pays file listing + schema reads and reads 2-4x inflated, turning
     // the adjudicator into its own false positive
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try {
-        val df = if (t == "events") Tables.events(spark, sfDir)
-                 else Tables.load(spark, sfDir, t)
-        df.limit(1).write.format("noop").mode("overwrite").save()
-      } catch { case _: Throwable => () }
-    }
-    flaggedAll.foreach { case (_, name, v, b, _) =>
+    Bench.warmTables(spark, sfDir)
+    flaggedAll.foreach { case (_, name, _, b, _) =>
       SparkEntry.queries.get(name) match {
         case Some(fn) =>
-          val t0 = System.nanoTime()
           try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            val iso = (System.nanoTime() - t0) / 1e9
+            val iso = Runs.timed(spark)(fn(_, sfDir))
             val verdict = if (iso <= 1.5 * b) "environment (bench window was contended)"
                           else "REGRESSION: reproduces when idle"
             println(f"[benchdiff] $name isolated ${iso}%.2f s (${iso / b}%.1fx baseline) -> $verdict")
           } catch { case e: Throwable =>
             println(s"[benchdiff] $name isolated re-measure failed: ${e.getMessage}")
           }
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
         case None =>
           println(s"[benchdiff] $name not in SparkEntry.queries (renamed?)")
       }

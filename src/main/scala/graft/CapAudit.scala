@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Similarity}
@@ -31,27 +31,12 @@ import graft.operators.{Dedup, Similarity}
 object CapAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Runs.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // the registered corpora (SparkEntry's planted-dup recipes, verbatim)
-    val docs = {
-      val base = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-      base.unionAll(base.filter(col("doc_id") < 20)
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          concat(col("text"), lit(" planted near duplicate tail")).as("text")))
-    }
-    val embeds = {
-      val base = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
-      base.unionAll(base.filter(col("vec_id") < 10)
-        .select((col("vec_id") + 1000000).as("vec_id"), col("embedding")))
-    }
+    // the registered corpora, through SparkEntry's own planted-dup recipes
+    val docs = SparkEntry.docsWithPlantedDups(Tables.documents(spark, sfDir))
+    val embeds = SparkEntry.embeddingsWithPlantedDups(Tables.embeddings(spark, sfDir))
 
     def diffBothWays(label: String, capped: DataFrame, lifted: DataFrame): Unit = {
       val a = capped.exceptAll(lifted).count()

@@ -1,16 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end check of the extension entry point: builds a session WITH
   * `spark.sql.extensions=graft.GraftExtensions` (fresh JVM via sbt fork) and
   * calls the injected function from plain SQL. */
 object ExtCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
+    val spark = Runs.builder()
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val c = spark.sql(

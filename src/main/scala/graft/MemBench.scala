@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Constrained-heap spill evidence (the round-8 ordered artifact): run the
   * heaviest registered queries at sf1 inside a JVM whose heap is capped far
@@ -30,22 +29,12 @@ object MemBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf1")
     val names = if (args.length > 1) args.drop(1).toSeq else ScaleBench.DefaultHeavy
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     // SPARK_GRAFT_PARTS decouples shuffle width from thread count: the
     // remediation for a per-task pressure failure is FINER partitions
     // (smaller per-task working set), the SURVEY §7 sizing knob
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "5000")
-      .config("spark.sql.ui.retainedExecutions", "30")
-      .config("spark.cleaner.periodicGC.interval", "120s")
-      .getOrCreate()
+    val builder = Runs.builder()
+    sys.env.get("SPARK_GRAFT_PARTS").foreach(builder.config("spark.sql.shuffle.partitions", _))
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val memSpill = new AtomicLong
@@ -63,11 +52,11 @@ object MemBench {
     })
 
     val heapCap = Runtime.getRuntime.maxMemory >> 20
-    println(s"[membench] heap cap $heapCap MiB | local[$cpus] | " +
-      s"shuffle.partitions=$parts | sf dir $sfDir")
+    println(s"[membench] heap cap $heapCap MiB | ${spark.sparkContext.master} | " +
+      s"shuffle.partitions=${spark.conf.get("spark.sql.shuffle.partitions")} | sf dir $sfDir")
     println("| query | wall s | mem spill MiB | disk spill MiB | peak task exec MiB | post-GC heap MiB |")
     println("|---|---|---|---|---|---|")
-    spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
+    Runs.warm(spark)
 
     // OOM anywhere in the cause chain poisons the JVM (heap fragmentation,
     // killed executor threads, half-freed memory-manager state) — rows
@@ -85,13 +74,8 @@ object MemBench {
     }
     var failures = 0
     names.foreach { n =>
-      val ss = spark.newSession()
       memSpill.set(0); diskSpill.set(0); peakExec.set(0)
-      val t0 = System.nanoTime()
-      val status = try {
-        SparkEntry.queries(n)(ss, sfDir).write.format("noop").mode("overwrite").save()
-        "ok"
-      } catch { case e: Throwable =>
+      val wall = try Right(Runs.timed(spark)(SparkEntry.queries(n)(_, sfDir))) catch { case e: Throwable =>
         failures += 1
         if (isOom(e)) {
           println(s"| $n | FAILED OutOfMemoryError: ${String.valueOf(e.getMessage).take(70)} | | | | |")
@@ -101,21 +85,16 @@ object MemBench {
           System.out.flush()
           System.exit(2)
         }
-        s"FAILED ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(70)}"
+        Left(s"FAILED ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(70)}")
       }
-      val wall = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(_.isCheckpointed)
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
       Thread.sleep(400) // listener events post async; let the bus drain
       val rt = Runtime.getRuntime
       val usedMb = (rt.totalMemory - rt.freeMemory) >> 20
-      if (status == "ok")
-        println(f"| $n | $wall%.1f | ${memSpill.get >> 20} | ${diskSpill.get >> 20} | ${peakExec.get >> 20} | $usedMb |")
-      else
-        println(s"| $n | $status | | | | |")
+      wall match {
+        case Right(s) =>
+          println(f"| $n | $s%.1f | ${memSpill.get >> 20} | ${diskSpill.get >> 20} | ${peakExec.get >> 20} | $usedMb |")
+        case Left(status) => println(s"| $n | $status | | | | |")
+      }
     }
     println(s"[membench] done: ${names.size - failures}/${names.size} completed under the $heapCap MiB cap")
     spark.stop()

@@ -53,20 +53,9 @@ object OrganicBench {
 
   def main(args: Array[String]): Unit = {
     val baskets1x = args.headOption.map(_.toLong).getOrElse(150000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "5000")
-      .config("spark.sql.ui.retainedExecutions", "30")
-      .config("spark.cleaner.periodicGC.interval", "120s")
-      .getOrCreate()
+    val spark = Runs.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
+    Runs.warm(spark)
 
     // the three iterative consumers, operator chains verbatim from SparkEntry
     val ops: Seq[(String, (SparkSession, Long) => DataFrame)] = Seq(
@@ -89,19 +78,6 @@ object OrganicBench {
       "adamic_adar" -> ((ss, n) =>
         Graph.adamicAdar(supportedEdges(ss, n), "pa", "pb")))
 
-    def timeOnce(fn: (SparkSession, Long) => DataFrame, n: Long): Double = {
-      val ss = spark.newSession()
-      val t0 = System.nanoTime()
-      fn(ss, n).write.format("noop").mode("overwrite").save()
-      val s = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(_.isCheckpointed)
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
-      s
-    }
-
     val kept1 = supportedEdges(spark.newSession(), baskets1x).count()
     val kept10 = supportedEdges(spark.newSession(), baskets1x * 10).count()
     println(s"[organic] baskets ${baskets1x} -> ${baskets1x * 10} (10x), " +
@@ -111,8 +87,9 @@ object OrganicBench {
     println("| operator | 1x s | 10x s | ratio |")
     println("|---|---|---|---|")
     ops.foreach { case (name, fn) =>
-      val s1 = math.min(timeOnce(fn, baskets1x), timeOnce(fn, baskets1x))
-      val s10 = math.min(timeOnce(fn, baskets1x * 10), timeOnce(fn, baskets1x * 10))
+      def timed(n: Long): Double = Runs.timed(spark)(fn(_, n))
+      val s1 = math.min(timed(baskets1x), timed(baskets1x))
+      val s10 = math.min(timed(baskets1x * 10), timed(baskets1x * 10))
       println(f"| $name | $s1%.2f | $s10%.2f | ${s10 / s1}%.1f |")
     }
     spark.stop()
@@ -189,13 +166,7 @@ object OrganicTriangleBench {
 
   def main(args: Array[String]): Unit = {
     val baskets1x = args.headOption.map(_.toLong).getOrElse(150000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "120s")
+    val spark = Runs.builder()
       // same single-JVM-pause insurance as OrganicDedupBench's 1000× leg:
       // a full GC on a tens-of-GB heap can outlast the default heartbeat
       // window, and the HeartbeatReceiver then kills the local "executor"
@@ -212,29 +183,15 @@ object OrganicTriangleBench {
         (1L << 30).toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
+    Runs.warm(spark)
 
-    def timeOnce(n: Long): Double = {
-      val ss = spark.newSession()
-      val t0 = System.nanoTime()
-      Graph.triangleCounts(rawEdges(ss, n), "pa", "pb")
-        .write.format("noop").mode("overwrite").save()
-      val s = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(_.isCheckpointed)
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
-      s
-    }
+    def timed(n: Long): Double =
+      Runs.timed(spark)(ss => Graph.triangleCounts(rawEdges(ss, n), "pa", "pb"))
     def triangleTotal(n: Long): Long = {
       val ss = spark.newSession()
       val t = Graph.triangleCounts(rawEdges(ss, n), "pa", "pb")
         .select(sum(col("triangles")).as("t")).collect()(0).getLong(0)
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(_.isCheckpointed)
-        .foreach(_.unpersist(blocking = false))
+      Runs.release(spark)
       System.gc()
       t / 3 // each triangle counted once per corner
     }
@@ -250,8 +207,8 @@ object OrganicTriangleBench {
     }
     println("| chain | 1x s | 10x s | ratio |")
     println("|---|---|---|---|")
-    val s1 = math.min(timeOnce(baskets1x), timeOnce(baskets1x))
-    val s10 = math.min(timeOnce(baskets1x * 10), timeOnce(baskets1x * 10))
+    val s1 = math.min(timed(baskets1x), timed(baskets1x))
+    val s10 = math.min(timed(baskets1x * 10), timed(baskets1x * 10))
     println(f"| q133_triangles | $s1%.2f | $s10%.2f | ${s10 / s1}%.1f |")
     spark.stop()
   }
@@ -366,49 +323,27 @@ object OrganicKnnBench {
     require(mults.headOption.contains(1L),
       s"multiplier list must start with 1 (the anchor); got ${mults.mkString(",")}")
     val evalIds: Seq[Long] = 0L until n1x // the FIXED eval set = the 1x ids
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "120s")
-      .getOrCreate()
+    val spark = Runs.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
-
-    def hygiene(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(_.isCheckpointed)
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
-    def timeOnce(fn: SparkSession => DataFrame): Double = {
-      val ss = spark.newSession()
-      val t0 = System.nanoTime()
-      fn(ss).write.format("noop").mode("overwrite").save()
-      val s = (System.nanoTime() - t0) / 1e9
-      hygiene(); s
-    }
+    Runs.warm(spark)
 
     println("| chain | n | wall s (min of 2) | readout |")
     println("|---|---|---|---|")
     mults.map(n1x * _).foreach { n =>
       val w183 = math.min(
-        timeOnce(ss => labelNoiseChain(ss, n, evalIds, k = 5)),
-        timeOnce(ss => labelNoiseChain(ss, n, evalIds, k = 5)))
+        Runs.timed(spark)(labelNoiseChain(_, n, evalIds, k = 5)),
+        Runs.timed(spark)(labelNoiseChain(_, n, evalIds, k = 5)))
       val flagged = labelNoiseChain(spark.newSession(), n, evalIds, k = 5)
         .filter(col("flagged")).count()
-      hygiene()
+      Runs.release(spark); System.gc()
       println(f"| q183_label_noise | $n | $w183%.2f | flagged $flagged of ${evalIds.size} |")
       def trunc(ss: SparkSession) = graft.operators.Similarity.truncationFidelity(
         organicEmbeddings(ss, n), "vec_id", "embedding",
         queryIds = Seq(0L, 1L, 2L, 3L, 4L, 5L, 6L, 7L), dims = 8)
-      val w346 = math.min(timeOnce(trunc), timeOnce(trunc))
+      val w346 = math.min(Runs.timed(spark)(trunc), Runs.timed(spark)(trunc))
       val agree = trunc(spark.newSession())
         .agg(sum(col("agree")).as("a")).collect()(0).getLong(0)
-      hygiene()
+      Runs.release(spark); System.gc()
       println(f"| q346_truncation_fidelity | $n | $w346%.2f | agree $agree of 8 |")
     }
     spark.stop()
@@ -431,39 +366,20 @@ object OrganicHarmonicBench {
     // (round-12 advisory)
     require(mults.headOption.contains(1L),
       s"multiplier list must start with 1 (the timed anchor); got ${mults.mkString(",")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "120s")
+    val spark = Runs.builder()
       // same single-JVM-pause insurance as the other organic rigs
       .config("spark.network.timeout", "600s")
       .config("spark.executor.heartbeatInterval", "30s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
+    Runs.warm(spark)
 
     val sources = Seq(1L, 2L, 3L, 4L, 5L, 6L) // q300's pinned sample
     def harmonic(ss: SparkSession, n: Long) =
       Graph.harmonicCentrality(
         OrganicTriangleBench.rawEdges(ss, n), "pa", "pb", sources, maxHops = 3)
 
-    def hygiene(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(_.isCheckpointed)
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
-    def timeOnce(n: Long): Double = {
-      val ss = spark.newSession()
-      val t0 = System.nanoTime()
-      harmonic(ss, n).write.format("noop").mode("overwrite").save()
-      val s = (System.nanoTime() - t0) / 1e9
-      hygiene(); s
-    }
+    def timed(n: Long): Double = Runs.timed(spark)(harmonic(_, n))
 
     mults.foreach { m =>
       val n = baskets1x * m
@@ -479,7 +395,7 @@ object OrganicHarmonicBench {
       val reach = harmonic(ss, n)
         .agg(sum(col("n_reached")).as("r"), count(lit(1)).as("k"))
         .collect()(0)
-      hygiene()
+      Runs.release(spark); System.gc()
       println(s"[organic-bfs] baskets $n: nodes $nodes, edges $edges, " +
         s"reached_nodes ${reach.getLong(1)}, src_node_pairs ${reach.getLong(0)} " +
         s"(sources ${sources.size}, hops 3)")
@@ -487,10 +403,10 @@ object OrganicHarmonicBench {
     val header = mults.tail.flatMap(m => Seq(s"${m}x s", s"${m}x/1x"))
     println(("| chain | 1x s" +: header).mkString("", " | ", " |"))
     println("|---" * (2 + header.size) + "|")
-    val s1 = math.min(timeOnce(baskets1x), timeOnce(baskets1x))
+    val s1 = math.min(timed(baskets1x), timed(baskets1x))
     val cells = mults.tail.flatMap { m =>
-      val t = if (m >= 100) timeOnce(baskets1x * m)
-              else math.min(timeOnce(baskets1x * m), timeOnce(baskets1x * m))
+      val t = if (m >= 100) timed(baskets1x * m)
+              else math.min(timed(baskets1x * m), timed(baskets1x * m))
       Seq(f"$t%.2f", f"${t / s1}%.1f")
     }
     println((f"| q300_harmonic | $s1%.2f" +: cells).mkString("", " | ", " |"))

@@ -63,13 +63,7 @@ object OrganicDedupBench {
     // just re-measure heap pressure, not growth.
     val mults: Seq[Long] = args.drop(1).headOption
       .map(_.split(',').toSeq.map(_.trim.toLong)).getOrElse(Seq(1L, 10L, 100L))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "120s")
+    val spark = Runs.builder()
       // the 1000× leg (20M docs) persists tens of GB of signatures in ONE
       // JVM; a single full-GC pause on a large heap can exceed the default
       // 120 s heartbeat window and the HeartbeatReceiver then kills the
@@ -80,7 +74,7 @@ object OrganicDedupBench {
       .config("spark.executor.heartbeatInterval", "30s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
+    Runs.warm(spark)
 
     // the two chains, operator composition verbatim from SparkEntry
     val ops: Seq[(String, (SparkSession, Long) => DataFrame)] = Seq(
@@ -91,19 +85,6 @@ object OrganicDedupBench {
       }),
       "q126_setsim_join" -> ((ss, n) =>
         Dedup.setSimilarityJoin(corpus(ss, n), "doc_id", "text", threshold = 0.5)))
-
-    def timeOnce(fn: (SparkSession, Long) => DataFrame, n: Long): Double = {
-      val ss = spark.newSession()
-      val t0 = System.nanoTime()
-      fn(ss, n).write.format("noop").mode("overwrite").save()
-      val s = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(_.isCheckpointed)
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
-      s
-    }
 
     // growth accounting: LSH candidates and kept pairs — q24 chain at
     // 1×/10×/100× (the round-9 order extends the organic evidence a full
@@ -137,16 +118,17 @@ object OrganicDedupBench {
     println(("| chain | 1x s" +: header).mkString("", " | ", " |"))
     println("|---" * (2 + header.size) + "|")
     ops.foreach { case (name, fn) =>
-      val s1 = math.min(timeOnce(fn, docs1x), timeOnce(fn, docs1x))
+      def timed(n: Long): Double = Runs.timed(spark)(fn(_, n))
+      val s1 = math.min(timed(docs1x), timed(docs1x))
       val cells = mults.tail.flatMap { m =>
         // keep the raw double and format both columns from it — a
         // format-then-parse round trip is locale-fragile (comma-decimal
         // defaults make .toDouble throw) and would compute the ratio
         // from the rounded string instead of the measured value
         val t: Option[Double] =
-          if (name.startsWith("q24") && m >= 100) Some(timeOnce(fn, docs1x * m))
+          if (name.startsWith("q24") && m >= 100) Some(timed(docs1x * m))
           else if (name.startsWith("q24") || m <= 10)
-            Some(math.min(timeOnce(fn, docs1x * m), timeOnce(fn, docs1x * m)))
+            Some(math.min(timed(docs1x * m), timed(docs1x * m)))
           else None
         Seq(t.map(v => f"$v%.2f").getOrElse("-"),
             t.map(v => f"${v / s1}%.1f").getOrElse("-"))
@@ -185,32 +167,14 @@ object OrganicLofBench {
 
   def main(args: Array[String]): Unit = {
     val n1 = args.headOption.map(_.toLong).getOrElse(20000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "120s")
-      .getOrCreate()
+    val spark = Runs.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
+    Runs.warm(spark)
 
     val r1 = 0.02 // n1·π·r² ≈ 25 expected neighbors ≥ k=5 at the default n1
-    def run(n: Long, r: Double): Double = {
-      val ss = spark.newSession()
-      val t0 = System.nanoTime()
+    def run(n: Long, r: Double): Double = Runs.timed(spark)(ss =>
       Similarity.localOutlierFactor(points(ss, n), "doc_id",
-          col("x"), col("y"), radius = r, k = 5, topN = 20)
-        .write.format("noop").mode("overwrite").save()
-      val s = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(_.isCheckpointed)
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
-      s
-    }
+        col("x"), col("y"), radius = r, k = 5, topN = 20))
     val rows = Seq(
       ("1x", n1, r1),
       ("10x r/sqrt(10) (occupancy-constant)", n1 * 10, r1 / math.sqrt(10)),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Decade-up evidence (the round-5/6 ordered sf1 run): materialize a 10×
@@ -29,17 +28,7 @@ object ScaleBench {
     val names = if (args.length > 1) args.drop(1).toSeq else DefaultHeavy
     val factor = 10
     val src = "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "5000")
-      .config("spark.sql.ui.retainedExecutions", "30")
-      .getOrCreate()
+    val spark = Runs.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Materialization guard keyed on a sentinel written AFTER the last
@@ -50,7 +39,7 @@ object ScaleBench {
     if (!sentinel.exists()) {
       val t0 = System.nanoTime()
       def replicate(name: String, keyCols: Map[String, Long]): Unit = {
-        val df = if (name == "events") Tables.events(spark, src) else Tables.load(spark, src, name)
+        val df = Tables.load(spark, src, name)
         val copies = (0 until factor).map { k =>
           keyCols.foldLeft(df) { case (d, (c, stride)) => d.withColumn(c, col(c) + lit(k * stride)) }
         }
@@ -69,30 +58,20 @@ object ScaleBench {
         s"(lineitem rows: ${spark.read.parquet(s"$bigDir/lineitem.parquet").count()})")
     }
 
-    spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
-    def timeOnce(name: String, dir: String): Double = {
-      val ss = spark.newSession()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(ss, dir).write.format("noop").mode("overwrite").save()
-      val s = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(_.isCheckpointed) // only copy — ContextCleaner frees on GC
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
-      s
-    }
+    Runs.warm(spark)
+    def timed(name: String, dir: String): Double =
+      Runs.timed(spark)(SparkEntry.queries(name)(_, dir))
     println("| query | sf0.1 s | sf1 s | ratio |")
     println("|---|---|---|---|")
     names.foreach { n =>
       try {
-        val s1 = math.min(timeOnce(n, src), timeOnce(n, src))
+        val s1 = math.min(timed(n, src), timed(n, src))
         // min-of-2 pays codegen on pass 1; past 100 s the first pass IS
         // steady-state (codegen is milliseconds against minutes) and a
         // second pass of a 300 s monster doubles the sweep for no signal
-        val first10 = timeOnce(n, bigDir)
+        val first10 = timed(n, bigDir)
         val s10 = if (first10 >= 100.0) first10
-                  else math.min(first10, timeOnce(n, bigDir))
+                  else math.min(first10, timed(n, bigDir))
         println(f"| $n | $s1%.2f | $s10%.2f | ${s10 / s1}%.1f |")
       } catch { case e: Throwable =>
         println(s"| $n | FAILED ${e.getMessage.take(80)} | | |")

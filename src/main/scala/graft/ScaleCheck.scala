@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators._
@@ -15,19 +15,14 @@ import graft.operators._
 object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(20)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Runs.builder().config("spark.sql.shuffle.partitions", "64").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val src = "/root/testdata/sf0.1"
     val big = java.nio.file.Files.createTempDirectory("graft_scale").toString
 
     // replicate with key offsets so orders⋈lineitem keys still line up
     def replicate(name: String, keyCols: Map[String, Long]): Unit = {
-      val df = if (name == "events") Tables.events(spark, src) else Tables.load(spark, src, name)
+      val df = Tables.load(spark, src, name)
       val copies = (0 until factor).map { k =>
         keyCols.foldLeft(df) { case (d, (c, stride)) => d.withColumn(c, col(c) + lit(k * stride)) }
       }
@@ -51,12 +46,7 @@ object ScaleCheck {
     val only = args.drop(1).toSet
     def time(tag: String)(f: String => DataFrame): Unit = {
       if (only.nonEmpty && !only.exists(tag.contains)) return
-      def run(dir: String): Double = {
-        val t = System.nanoTime()
-        f(dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t) / 1e9
-      }
-      val small = run(src); val large = run(big)
+      val small = Runs.timed(spark)(_ => f(src)); val large = Runs.timed(spark)(_ => f(big))
       println(f"[scale] $tag%-28s 1x=$small%6.2fs ${factor}x=$large%7.2fs ratio=${large / small}%5.1f")
     }
 

@@ -124,7 +124,7 @@ object SparkEntry {
   /** Documents corpus with planted near-duplicates (doc_id+1000000 gets the
     * original text plus a short suffix) — makes the near-dup/LSH operators'
     * outputs non-empty and deterministic at any SF. */
-  private def docsWithPlantedDups(documents: DataFrame): DataFrame = {
+  private[graft] def docsWithPlantedDups(documents: DataFrame): DataFrame = {
     val base = documents.select(col("doc_id"), col("text"))
     val dups = documents.filter(col("doc_id") < 20)
       .select((col("doc_id") + 1000000).as("doc_id"),
@@ -132,7 +132,7 @@ object SparkEntry {
     base.unionAll(dups)
   }
 
-  private def embeddingsWithPlantedDups(embeddings: DataFrame): DataFrame = {
+  private[graft] def embeddingsWithPlantedDups(embeddings: DataFrame): DataFrame = {
     val base = embeddings.select(col("vec_id"), col("embedding"))
     val dups = embeddings.filter(col("vec_id") < 10)
       .select((col("vec_id") + 1000000).as("vec_id"), col("embedding"))
@@ -174,6 +174,9 @@ object SparkEntry {
       "email_address,first name,org", ',').getBytes("UTF-8"))
     val bad = new java.io.File(uploadDir, "headeronly.csv")
     java.nio.file.Files.write(bad.toPath, "email,nome\n".getBytes("UTF-8"))
+    // registered after the dir: exit-time deletion runs in reverse order,
+    // and a non-empty dir cannot be deleted
+    Seq(up1, up2, bad).foreach(_.deleteOnExit())
 
     // --- stage 1: file-level validation rejects the header-only upload
     val uploads = Seq(up1, up2, bad).map(_.getAbsolutePath)
@@ -2607,6 +2610,7 @@ object SparkEntry {
     java.nio.file.Files.write(f2.toPath,
       "email_address;Sobrenome;org\ncarol@example.com;Silva;Café Ltda\n"
         .getBytes(java.nio.charset.Charset.forName("ISO-8859-1")))
+    Seq(f1, f2).foreach(_.deleteOnExit()) // after the dir, as in `entry`
     CsvIngest.ingest(spark, f1.getAbsolutePath)
       .unionByName(CsvIngest.ingest(spark, f2.getAbsolutePath), allowMissingColumns = true)
   }

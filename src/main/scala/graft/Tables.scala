@@ -20,6 +20,11 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** One table by name; `events` goes through [[events]]' TIMESTAMP(NANOS)
+    * normalization, every other table is a [[scan]]. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    if (name == "events") events(spark, dir) else scan(spark, dir, name)
+
   /** Plain parquet scan, with one normalization: driver testdata generations
     * differ in whether temporal columns are annotated isAdjustedToUTC
     * (→ TIMESTAMP) or not (→ TIMESTAMP_NTZ, which Spark 4 refuses to cast to
@@ -31,7 +36,7 @@ object Tables {
     * at 100 TB means reading every row group instead of pruning on stats.
     * Session-level and intentionally left set, same contract as the
     * nanosAsLong conf in [[events]]. */
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+  private def scan(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     spark.read.parquet(s"$dir/$name.parquet")
   }
@@ -53,7 +58,7 @@ object Tables {
     * everywhere rather than a hard analysis error. */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = load(s, d, "events")
+    val df = scan(s, d, "events")
     // driver testdata carries TIMESTAMP(NANOS) (surfaces as long under the
     // legacy conf); re-written copies are already proper timestamps
     if (df.schema("ts").dataType == org.apache.spark.sql.types.LongType)

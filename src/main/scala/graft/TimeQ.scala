@@ -1,38 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Bench-shaped single-query timer (t0 BEFORE the query constructor, like
-  * Bench — eager-constructor queries attribute their materialization here,
-  * unlike Explain's post-construction timer).
+/** Bench-shaped single-query timer ([[Runs.timed]]: t0 BEFORE the query
+  * constructor on a fresh session, like Bench — eager-constructor queries
+  * attribute their materialization here).
   * Usage: runMain graft.TimeQ <sfDir> <query...>  */
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Runs.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
-    var ran = 0
+    Runs.warm(spark)
     args.tail.foreach { n =>
-      val ss = spark.newSession() // per-query SQL state, like Bench
-      val t0 = System.nanoTime()
-      SparkEntry.queries(n)(ss, sfDir).write.format("noop").mode("overwrite").save()
-      println(f"[timeq] $n ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      // same per-query hygiene as Bench: drop pinned blocks between runs,
-      // and GC so ContextCleaner actually releases shuffle/broadcast state
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(_.isCheckpointed) // only copy — ContextCleaner frees on GC
-        .foreach(_.unpersist(blocking = false))
-      ran += 1
-      if (ran % 10 == 0) System.gc()
+      val s = Runs.timed(spark)(SparkEntry.queries(n)(_, sfDir))
+      println(f"[timeq] $n $s%.2f s")
     }
     spark.stop()
   }

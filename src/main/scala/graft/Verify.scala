@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,13 +14,7 @@ object Verify {
     // constant tables are corpus-trained) — tell oracleSql which SF dir
     // this verify run is comparing at
     System.setProperty("graft.sfDir", sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Runs.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q95,q96 restricts the dump (local iteration only;
@@ -39,10 +32,7 @@ object Verify {
       }
       // per-query hygiene (same as Bench): without it, persisted blocks
       // from 250+ operators accumulate for the whole dump
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(_.isCheckpointed) // only copy — ContextCleaner frees on GC
-        .foreach(_.unpersist(blocking = false))
+      Runs.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

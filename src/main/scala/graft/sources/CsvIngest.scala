@@ -184,7 +184,9 @@ object CsvIngest {
       val Sniff(enc, delim, lines) = sniff(path)
       if (lines.length < 2) Left(NoDataRows)
       else {
-        val headers = lines.head.split(delim).map(normalizeHeader).toSeq
+        // quote-aware, like the csv reader `ingest` parses with: a quoted
+        // "E-Mail" header must map to email here too
+        val headers = splitQuoted(lines.head, delim).map(normalizeHeader)
         val missing = RequiredColumns.filterNot(headers.contains)
         if (missing.nonEmpty) Left(MissingRequiredHeader(missing))
         else { val _ = enc; Right(()) }
@@ -248,7 +250,10 @@ object CsvIngest {
 
   /** Transcode the csv file(s) at `path` from `fromCharset` to UTF-8 copies
     * in a temp dir (streaming IO — constant memory per file). Used only for
-    * charsets Spark's csv source can't parse natively. */
+    * charsets Spark's csv source can't parse natively. The dir and every
+    * copy are deleted at JVM exit (the JVM cannot delete a non-empty dir,
+    * and it deletes in reverse registration order, so each copy is
+    * registered after the dir). */
   private def transcodeToUtf8(path: String, fromCharset: String): String = {
     val outDir = Files.createTempDirectory("graft_transcode")
     outDir.toFile.deleteOnExit()
@@ -263,10 +268,12 @@ object CsvIngest {
         } finally it.close()
       } else Seq(p)
     files.foreach { f =>
+      val copy = outDir.resolve(f.getFileName)
+      copy.toFile.deleteOnExit()
       val in = new java.io.BufferedReader(new java.io.InputStreamReader(
         Files.newInputStream(f), Charset.forName(fromCharset)))
       val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-        Files.newOutputStream(outDir.resolve(f.getFileName)), StandardCharsets.UTF_8))
+        Files.newOutputStream(copy), StandardCharsets.UTF_8))
       try {
         val buf = new Array[Char](64 * 1024)
         var n = in.read(buf)

@@ -170,8 +170,11 @@ class CsvIngestSpec extends SparkSpec {
   }
 
   test("validateFile: accepts a valid upload (variation header counts as email)") {
-    val p = tmpCsv("ok.csv", "E-Mail;Nome\nana@example.com;Ana\n".getBytes(StandardCharsets.UTF_8))
-    assert(validateFile(p).isRight)
+    Seq("E-Mail;Nome\nana@example.com;Ana\n",
+        // fully quoted: ingest's csv reader strips the quotes, so must this
+        "\"E-Mail\";\"Nome\"\n\"ana@example.com\";\"Ana\"\n").foreach { csv =>
+      assert(validateFile(tmpCsv("ok.csv", csv.getBytes(StandardCharsets.UTF_8))).isRight, csv)
+    }
   }
 
   // --------------------------------------------------------------- ingest

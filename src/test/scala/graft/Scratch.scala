@@ -19,16 +19,9 @@ object Scratch {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val what = if (args.length > 1) args(1) else "q133"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Runs.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    noop(spark.range(1000000).selectExpr("sum(id)"))
+    Runs.warm(spark)
 
     what match {
       case "q133" => q133(spark, sfDir)
