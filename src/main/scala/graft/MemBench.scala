@@ -29,6 +29,7 @@ object MemBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf1")
     val names = if (args.length > 1) args.drop(1).toSeq else ScaleBench.DefaultHeavy
+    ScaleBench.requireRegistered("membench", names)
     // SPARK_GRAFT_PARTS decouples shuffle width from thread count: the
     // remediation for a per-task pressure failure is FINER partitions
     // (smaller per-task working set), the SURVEY §7 sizing knob

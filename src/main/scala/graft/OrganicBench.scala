@@ -31,25 +31,31 @@ import graft.operators.Graph
 object OrganicBench {
   private val ItemsPerBasket = 7
 
-  /** The SparkEntry co-occurrence recipe over synthdocs baskets: one
-    * map-side-combined shuffle to the basket's sorted distinct item set,
-    * pair explode map-side, then the support floor. */
-  private def supportedEdges(ss: SparkSession, baskets: Long): DataFrame = {
+  /** The SparkEntry co-occurrence recipe over synthdocs baskets WITHOUT
+    * the support floor: one map-side-combined shuffle to the basket's
+    * sorted distinct item set, then the pair explode map-side — the raw
+    * shape partCooccurrenceEdges feeds q133/q300 (dup pairs kept;
+    * triangleCounts distincts internally, exactly as in production). */
+  private[graft] def rawEdges(ss: SparkSession, baskets: Long): DataFrame = {
     val universe = math.max(100L, baskets * 2 / 15) // baskets / 7.5
     val docs = ss.read.format("synthdocs")
       .option("rows", baskets).option("partitions", 32).load()
-    val items = docs.select(col("doc_id"),
-      explode(sequence(lit(1), lit(ItemsPerBasket))).as("j"))
+    docs.select(col("doc_id"),
+        explode(sequence(lit(1), lit(ItemsPerBasket))).as("j"))
       .select(col("doc_id").as("k"),
         pmod(xxhash64(col("doc_id"), col("j")), lit(universe)).as("item"))
-    items.groupBy("k")
+      .groupBy("k")
       .agg(sort_array(collect_set(col("item"))).as("ps"))
       .select(posexplode(col("ps")).as(Seq("i", "pa")), col("ps"))
       .select(col("pa"),
         explode(slice(col("ps"), col("i") + lit(2), size(col("ps")))).as("pb"))
+  }
+
+  /** [[rawEdges]] under the w≥2 support floor — the q240/q231/q139 input. */
+  private def supportedEdges(ss: SparkSession, baskets: Long): DataFrame =
+    rawEdges(ss, baskets)
       .groupBy("pa", "pb").agg(count(lit(1)).as("w"))
       .filter(col("w") >= 2).select("pa", "pb")
-  }
 
   def main(args: Array[String]): Unit = {
     val baskets1x = args.headOption.map(_.toLong).getOrElse(150000L)
@@ -118,25 +124,7 @@ object OrganicBench {
   * — the sf0.1 orders count, so 1× matches q133's real workload scale).
   */
 object OrganicTriangleBench {
-  private val ItemsPerBasket = 7
-
-  /** OrganicBench's basket recipe WITHOUT the support floor — the raw
-    * pair-explode shape partCooccurrenceEdges feeds q133 (dup pairs kept;
-    * triangleCounts distincts internally, exactly as in production). */
-  private[graft] def rawEdges(ss: SparkSession, baskets: Long): DataFrame = {
-    val universe = math.max(100L, baskets * 2 / 15) // baskets / 7.5
-    val docs = ss.read.format("synthdocs")
-      .option("rows", baskets).option("partitions", 32).load()
-    docs.select(col("doc_id"),
-        explode(sequence(lit(1), lit(ItemsPerBasket))).as("j"))
-      .select(col("doc_id").as("k"),
-        pmod(xxhash64(col("doc_id"), col("j")), lit(universe)).as("item"))
-      .groupBy("k")
-      .agg(sort_array(collect_set(col("item"))).as("ps"))
-      .select(posexplode(col("ps")).as(Seq("i", "pa")), col("ps"))
-      .select(col("pa"),
-        explode(slice(col("ps"), col("i") + lit(2), size(col("ps")))).as("pb"))
-  }
+  import OrganicBench.rawEdges
 
   /** (nodes, edges, wedges) under the operator's own orientation. */
   private def graphShape(ss: SparkSession, baskets: Long): (Long, Long, Long) = {
@@ -222,7 +210,7 @@ object OrganicTriangleBench {
   * bit_or aggregate — Σ_hop |adjacency rows incident to the frontier|
   * ≤ 2m·maxHops, i.e. LINEAR in edges regardless of how the frontier
   * saturates (on a small-world graph it is node-sized by hop 2). Under
-  * organic growth (the [[OrganicTriangleBench]] basket recipe verbatim:
+  * organic growth (the [[OrganicBench]] basket recipe verbatim:
   * 7-item baskets, universe = baskets/7.5) edges grow ~10× for 10×
   * baskets, so wall should read ~linear-in-m — the 100 TB feasibility
   * claim this bench measures. Reach accounting (Σ n_reached over the
@@ -377,14 +365,14 @@ object OrganicHarmonicBench {
     val sources = Seq(1L, 2L, 3L, 4L, 5L, 6L) // q300's pinned sample
     def harmonic(ss: SparkSession, n: Long) =
       Graph.harmonicCentrality(
-        OrganicTriangleBench.rawEdges(ss, n), "pa", "pb", sources, maxHops = 3)
+        OrganicBench.rawEdges(ss, n), "pa", "pb", sources, maxHops = 3)
 
     def timed(n: Long): Double = Runs.timed(spark)(harmonic(_, n))
 
     mults.foreach { m =>
       val n = baskets1x * m
       val ss = spark.newSession()
-      val und = OrganicTriangleBench.rawEdges(ss, n).select(
+      val und = OrganicBench.rawEdges(ss, n).select(
           least(col("pa"), col("pb")).as("a"), greatest(col("pa"), col("pb")).as("b"))
         .filter(col("a") =!= col("b")).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

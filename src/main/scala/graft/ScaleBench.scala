@@ -2,18 +2,21 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Decade-up evidence (the round-5/6 ordered sf1 run): materialize a 10×
-  * replication of sf0.1 (fact keys offset per copy — the ScaleCheck
-  * recipe, dims stay 1× as a star schema does) and run the HEAVIEST
-  * registered queries end-to-end at both scales, twice each (min taken:
-  * first pass pays codegen), printing one markdown table row per query.
-  * A ratio ≲ 10 on linear-work operators is the no-superlinear-surprise
-  * evidence; known caveats are annotated where replication itself changes
-  * the workload (co-occurrence pair WEIGHTS multiply ×copies because part
-  * keys are shared across offset copies — the support floor then admits
-  * more pairs, so graph queries see a denser graph than a real sf1 would).
+/** Decade-up evidence (the round-5/6 ordered sf1 run) and the one
+  * replicate-and-time rig: materialize a 10× replication of sf0.1 (fact
+  * keys offset per copy so joins still line up, dims stay 1× as a star
+  * schema does) and run registered queries end-to-end at both scales,
+  * twice each (min taken: first pass pays codegen), printing one markdown
+  * table row per query. A ratio ≲ 10 on linear-work operators is the
+  * no-superlinear-surprise evidence; known caveats are annotated where
+  * replication itself changes the workload (co-occurrence pair WEIGHTS
+  * multiply ×copies because part keys are shared across offset copies —
+  * the support floor then admits more pairs, so graph queries see a denser
+  * graph than a real sf1 would; the organic-growth rigs measure those).
   *
-  * Usage: runMain graft.ScaleBench [bigDir] [query...]
+  * Usage: runMain graft.ScaleBench [bigDir] [query...]  (defaults:
+  * /tmp/sf1, [[DefaultHeavy]]). A name that is not a registered query
+  * exits 2 before anything is materialized or timed.
   */
 object ScaleBench {
   val DefaultHeavy: Seq[String] = Seq(
@@ -23,9 +26,24 @@ object ScaleBench {
     "q341_reciprocal_match", "q122_bigram_novelty", "q335_logrank",
     "q326_pagerank_directed")
 
+  /** The names that are not [[SparkEntry.queries]] keys. */
+  private[graft] def unregistered(names: Seq[String]): Seq[String] =
+    names.filterNot(SparkEntry.queries.keySet)
+
+  /** Exits 2 on an unregistered name — checked before the rig builds a
+    * session, so a typo costs neither a materialization nor a FAILED row. */
+  private[graft] def requireRegistered(rig: String, names: Seq[String]): Unit = {
+    val unknown = unregistered(names)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[$rig] not registered queries: ${unknown.mkString(", ")}")
+      System.exit(2)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val bigDir = args.headOption.getOrElse("/tmp/sf1")
     val names = if (args.length > 1) args.drop(1).toSeq else DefaultHeavy
+    requireRegistered("sf1", names)
     val factor = 10
     val src = "/root/testdata/sf0.1"
     val spark = Runs.builder().getOrCreate()

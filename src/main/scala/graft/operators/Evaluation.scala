@@ -3719,7 +3719,7 @@ object Evaluation {
         coalesce(col("h_t"), lit(0L)).cast("long").as("h_treated"),
         coalesce(col("h_c"), lit(0L)).cast("long").as("h_control"),
         // money-magnitude means: round(x·1e4)/1e4 fixed-point, NOT a
-        // decimal(18,9) cast — 20× daily cents overflow 1e9 (ScaleCheck)
+        // decimal(18,9) cast — 20× daily cents overflow 1e9 (20× replication)
         (round(col("tm_t") * lit(1e4d)).cast("long").cast("double") / lit(1e4d))
           .as("tmean_treated"),
         (round(col("tm_c") * lit(1e4d)).cast("long").cast("double") / lit(1e4d))

@@ -132,4 +132,11 @@ class BenchHarnessSpec extends AnyFunSuite {
     assert(Bench.unresolvedRescues(rig, base, cap = 2).map(_._1) ===
       Seq("q02_b", "q01_a")) // worst kept first (0.80 > 0.50), q03 capped out
   }
+
+  test("ScaleBench.DefaultHeavy (also MemBench's default list) names only " +
+      "registered queries; an unknown name is reported by the up-front check") {
+    assert(ScaleBench.unregistered(ScaleBench.DefaultHeavy).isEmpty)
+    assert(ScaleBench.unregistered(Seq("q15_row_hash", "no_such_query")) ===
+      Seq("no_such_query"))
+  }
 }
