@@ -13,7 +13,11 @@ import graft.streaming.EventStream
   * query key maps to. Every ★ operator has BOTH a `queries` entry and an
   * `oracleSql` entry (DuckDB, same parquet tables); ☆ operators (not
   * SQL-expressible: LSH, ANN, streaming, CSV sniffing, multimodal) have a
-  * `queries` entry plus a ScalaTest spec.
+  * `queries` entry plus a ScalaTest spec. The exceptions are spec-only:
+  * `EventStream`'s streaming runners and stateful operators (all but
+  * `distributionSnapshot`; a stream needs a live source and a checkpoint),
+  * `Formats`' readers and writers, and `Sinks.writeBucketed` /
+  * `Sinks.writeAudited` (side-effecting writes, no result frame).
   *
   * Oracle-parity rules used throughout:
   *  - every computed column is aliased IDENTICALLY in Spark and SQL;
@@ -1770,9 +1774,7 @@ object SparkEntry {
       // ★ oracle-checked PCA: exact fixed-point moments + unrolled
       // quantized power iteration/deflation (3 steps × 2 components) —
       // every intermediate an exact integer or correctly-rounded rational,
-      // so the unrolled-CTE oracle matches hash-exactly. The breeze
-      // eigensolve variant (pcaProject) stays spec-pinned as the
-      // exact-eigen path of the same capability
+      // so the unrolled-CTE oracle matches hash-exactly
       Similarity.pcaPowerProject(Tables.embeddings(s, d), "vec_id",
         "embedding", k = 2, iters = 3)),
     "q222_bpe_subwords" -> ((s, d) => {

@@ -31,10 +31,6 @@ object Cols {
     * that need null-position fidelity should coalesce with a sentinel first. */
   def rowHashSha(cols: Column*): Column = sha2(concat_ws("|", cols: _*), 256)
 
-  /** md5 variant used where the DuckDB oracle must reproduce the hash
-    * (md5 is the lowest-common-denominator digest both engines expose). */
-  def rowHashMd5(cols: Column*): Column = md5(concat_ws("|", cols: _*))
-
   /** Whitespace-collapsed, lower-cased text; basis for fingerprints and shingles. */
   def normText(c: Column): Column = lower(regexp_replace(trim(c), "\\s+", " "))
 

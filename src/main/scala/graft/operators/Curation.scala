@@ -635,65 +635,22 @@ object Curation {
     syms
   }
 
-  /** Distributed BPE tokenizer training: learn `nMerges` merge rules by
-    * iterating [[bpePairCounts]]'s count over the CURRENT segmentation —
-    * the full training loop, not just one round. Per round, one vocab-sized
-    * distributed job (segment each distinct word under the merges so far,
-    * emit adjacent symbol pairs weighted by word frequency, aggregate) and a
-    * 1-row collect of the argmax pair — the kmeans driver-loop pattern; the
-    * corpus-sized work happens ONCE, building the cached word-frequency
-    * table. Ties break (count desc, pair asc) so the learned table is
+  /** Distributed BPE tokenizer training (the q221/q222 trainer): learn
+    * `nMerges` merge rules by iterating [[bpePairCounts]]'s count over the
+    * CURRENT segmentation. The corpus-sized work happens ONCE, building the
+    * cached word-frequency table; each round is one vocab-sized job
+    * (segment each distinct word under the merges so far, emit adjacent
+    * symbol pairs weighted by word frequency, aggregate) and a top-K
+    * collect. Ties break (count desc, pair asc) so the learned table is
     * deterministic. Returns (rank, left_sym, right_sym, pair_count).
     *
-    * ☆ no SQL oracle: the greedy merge-all re-segmentation inside each round
-    * has no DuckDB twin (a repeated-textual-replace encoding diverges from
-    * reference BPE on odd same-symbol runs ≥5). Round 1 ≡ q220, which IS
-    * oracle-checked; CurationSpec pins a known-answer 3-round training. */
-  def bpeTrain(docs: DataFrame, textCol: String, nMerges: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val wc = docs.select(explode(tokens(col(textCol))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
-      .where(length(col("w")) >= 2)
-      .as[(String, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    var exhausted = false
-    while (merges.size < nMerges && !exhausted) {
-      val rank = merges.zipWithIndex
-        .map { case ((a, b, _), r) => (a, b) -> r }.toMap
-      val bc = spark.sparkContext.broadcast(rank)
-      val top = wc.mapPartitions { it =>
-          val r = bc.value
-          it.flatMap { case (w, c) =>
-            val syms = segmentGreedy(w, r)
-            (0 until syms.length - 1).iterator.map(i => ((syms(i), syms(i + 1)), c))
-          }
-        }
-        .groupByKey(_._1).mapValues(_._2).reduceGroups(_ + _)
-        .map { case ((a, b), n) => (a, b, n) }
-        .orderBy(desc("_3"), asc("_1"), asc("_2"))
-        .limit(1).collect()
-      // the round's broadcast is dead once the collect returns; without an
-      // explicit destroy, an nMerges-round training keeps nMerges live
-      // broadcasts (each a growing rank map) until a periodic driver GC —
-      // real memory pressure on the 32k-merge scale path
-      bc.destroy() // public destroy() delegates to destroy(blocking = false) — no per-round RPC wait
-      if (top.isEmpty) exhausted = true else merges += top.head
-    }
-    wc.unpersist(false)
-    merges.zipWithIndex
-      .map { case ((a, b, n), r) => (r + 1, a, b, n) }.toSeq
-      .toDF("rank", "left_sym", "right_sym", "pair_count")
-  }
-
-  /** Batched BPE training — [[bpeTrain]]'s scale path. The sequential
-    * trainer drives ONE Spark job per merge (32k-merge vocab = 32k job
-    * waves); this variant learns a PROVABLY-IDENTICAL merge list by
-    * accepting, per round, the maximal safe PREFIX of the pair ranking —
-    * the SentencePiece-style batching trick with the heuristics replaced
-    * by sound bounds, so batched ≡ sequential exactly (CurationSpec pins
-    * it on known-answer and random corpora):
+    * Sequential BPE takes ONE merge per round (a 32k-merge vocab = 32k job
+    * waves); this trainer learns the IDENTICAL merge list by accepting,
+    * per round, the maximal safe PREFIX of the pair ranking — the
+    * SentencePiece-style batching trick with the heuristics replaced by
+    * sound bounds (CurationSpec pins the merge list against
+    * `SparkEntry.bpeSequentialReference` and across batch sizes, `batchK`
+    * = 1 being the one-merge-per-round schedule):
     *
     *  - prefix only: candidates are scanned in the sequential selection
     *    order (count desc, pair asc) and the batch CUTS at the first
@@ -715,11 +672,11 @@ object Curation {
     * so maxL(s) ≤ max(max over top-K pairs ending in s, c_K) — sound, and
     * tight exactly where batching matters (low tail counts). Each round
     * is therefore ONE vocab-sized segmentation job + one K-row collect —
-    * never MORE jobs than the sequential trainer, ≥1 merge guaranteed per
-    * round. On concentrated early-natural-language frontiers the bound
-    * correctly cuts batches at 1 (sequential BPE genuinely can pick a
-    * just-created pair next — e.g. (t,h) then (th,e) — so larger batches
-    * there would be WRONG, not just risky); symbol-diverse frontiers
+    * never MORE rounds than merges, ≥1 merge guaranteed per round. On
+    * concentrated early-natural-language frontiers the bound correctly
+    * cuts batches at 1 (sequential BPE genuinely can pick a just-created
+    * pair next — e.g. (t,h) then (th,e) — so larger batches there would
+    * be WRONG, not just risky); symbol-diverse frontiers
     * (vocab tails, multi-domain corpora, the mid-training regime) batch
     * fat, which is where the 32k-merge wave count collapses. */
   def bpeTrainBatched(docs: DataFrame, textCol: String, nMerges: Int,
@@ -750,7 +707,11 @@ object Curation {
         .toDF("a", "b", "c")
         .orderBy(desc("c"), asc("a"), asc("b")).limit(batchK)
         .as[(String, String, Long)].collect()
-      bc.destroy() // dead after the collect — see bpeTrain; non-blocking (see note there)
+      // the round's broadcast (a growing rank map) is dead once the collect
+      // returns; without an explicit destroy every round would leave one
+      // live until a periodic driver GC. Public destroy() delegates to
+      // destroy(blocking = false) — no per-round RPC wait
+      bc.destroy()
       if (top.isEmpty) exhausted = true
       else {
         // sound new-pair bounds from the collect alone: a pair OUTSIDE the

@@ -379,47 +379,12 @@ object Dedup {
 
   // ---------------------------------------------------------------- SimHash
 
-  private[graft] def simhash64(text: String): Long = {
-    val acc = new Array[Int](64)
-    text.toLowerCase.split("\\s+").filter(_.nonEmpty).foreach { tok =>
-      val h = fnv1a64(tok)
-      var b = 0
-      while (b < 64) { if (((h >>> b) & 1L) == 1L) acc(b) += 1 else acc(b) -= 1; b += 1 }
-    }
-    var out = 0L; var b = 0
-    while (b < 64) { if (acc(b) > 0) out |= (1L << b); b += 1 }
-    out
-  }
-
-  /** (id, simhash) — shuffle-free. */
-  def simhashes(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    import df.sparkSession.implicits._
-    df.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
-      .map { case (id, t) => (id, simhash64(Option(t).getOrElse(""))) }
-      .toDF(idCol, "simhash")
-  }
-
-  /** SimHash near-dup pairs: band the 64-bit hash into `maxHamming + 1`
-    * chunks — by pigeonhole, any pair within Hamming distance ≤ maxHamming
-    * shares at least one INTACT chunk — bucket on (chunk_idx, chunk_value),
-    * verify popcount within buckets. Recall is complete for the requested
-    * distance at any maxHamming ≤ 63 (chunk width shrinks as it grows). */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame = {
-    import df.sparkSession.implicits._
-    val sigs = df.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
-      .map { case (id, t) => (id, simhash64(Option(t).getOrElse(""))) }
-    hammingPairs64(sigs, maxHamming, maxBucket)
-      .withColumnRenamed("id_a", "doc_id_a").withColumnRenamed("id_b", "doc_id_b")
-  }
-
-  /** [[simhash64]]'s ORACLE-PORTABLE twin: the identical ±1 bit-vote
-    * structure, but each token hashes to the first 8 md5 bytes interpreted
-    * little-endian — which is exactly DuckDB's `md5_number_upper(tok)` —
-    * so the WHOLE simhash (tokenize → hash → bit votes → sign fold) has a
-    * native SQL expression in both engines. fnv1a has no sane SQL twin
-    * (char-loop with wrapping 64-bit multiply); md5 is built into both.
-    * Ties (bit vote sum 0) resolve to 0 on both sides. */
+  /** 64-bit SimHash (Charikar 2002): each whitespace token of the
+    * lower-cased text votes ±1 on every bit of its hash, and the signature
+    * keeps the bits with a positive vote sum (ties resolve to 0). Tokens
+    * hash to the first 8 md5 bytes read little-endian — exactly DuckDB's
+    * `md5_number_upper(tok)` — so the WHOLE simhash (tokenize → hash → bit
+    * votes → sign fold) has a native SQL expression in both engines. */
   private[graft] def simhashMd5(text: String,
                                 md: java.security.MessageDigest): Long = {
     val acc = new Array[Int](64)
@@ -436,11 +401,14 @@ object Dedup {
     out
   }
 
-  /** [[simhashPairs]] over [[simhashMd5]] signatures — same pigeonhole
-    * band join, same complete recall, but every emitted (id_a, id_b,
+  /** SimHash near-dup pairs (q25) over [[simhashMd5]] signatures: band
+    * the 64-bit hash into `maxHamming + 1` chunks — by pigeonhole, any pair
+    * within Hamming distance ≤ maxHamming shares at least one INTACT chunk
+    * — bucket on (chunk_idx, chunk_value), verify popcount within buckets.
+    * Recall is complete for the requested distance at any maxHamming ≤ 63
+    * (chunk width shrinks as it grows), and every emitted (id_a, id_b,
     * hamming) row is checkable against an all-pairs DuckDB truth that
-    * recomputes the signatures from the raw text (q25's oracle). The
-    * fnv1a variant stays the engine default (no per-token md5 cost). */
+    * recomputes the signatures from the raw text (q25's oracle). */
   def simhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
                            maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame = {
     import df.sparkSession.implicits._
@@ -453,8 +421,8 @@ object Dedup {
       .withColumnRenamed("id_a", "doc_id_a").withColumnRenamed("id_b", "doc_id_b")
   }
 
-  /** The pigeonhole-banded Hamming join behind [[simhashPairs]] (and the
-    * image perceptual-hash dedup): chunk each 64-bit signature into
+  /** The pigeonhole-banded Hamming join behind [[simhashPairsPortable]]
+    * (and the image perceptual-hash dedup): chunk each 64-bit signature into
     * `maxHamming + 1` bands, bucket on (band, chunk) — any pair within the
     * distance shares an intact band — popcount-verify inside buckets.
     * Emits (id_a, id_b, hamming), a < b, exactly once. */
@@ -492,8 +460,9 @@ object Dedup {
 
   /** Connected components over a near-dup pair list: collapses pairs into
     * clusters so "keep one representative per duplicate group" is a groupBy
-    * away (the step after minhashLsh/simhashPairs/nearDupCosine — pairs
-    * alone over-delete when A~B and B~C but the pipeline drops both B and C).
+    * away (the step after minhashLsh/simhashPairsPortable/nearDupCosine —
+    * pairs alone over-delete when A~B and B~C but the pipeline drops both B
+    * and C).
     *
     * Min-label propagation: every node starts as its own label; each round
     * every node takes the min label among itself and its neighbors; stops at

@@ -41,40 +41,6 @@ object Issues {
     staging.join(broadcast(existing), col(stagingKey) === col(existingKey), joinType)
   }
 
-  /** EXISTING_EMAIL at the scale where `existing` does NOT fit in executor
-    * memory (no broadcast possible): build a Bloom filter over the existing
-    * keys (driver-side sketch of the dim, ~1.2 GB per 10^9 keys at 1% fpp —
-    * still broadcastable when the raw table is not), pre-filter the fact side
-    * so only probable-hits shuffle, then the exact shuffled anti/semi join
-    * settles false positives. Shuffle volume drops from |staging| to
-    * ~|matches| + fpp·|staging|. */
-  def existingKeysAtScale(staging: DataFrame, existing: DataFrame,
-                          stagingKey: String, existingKey: String,
-                          anti: Boolean, expectedKeys: Long = 1000000L,
-                          fpp: Double = 0.01): DataFrame = {
-    // build AND probe on the stringified key: stat.bloomFilter inserts
-    // integral columns via putLong, which would never match a string probe —
-    // one canonical representation on both sides avoids the type trap
-    val keyStr = "_graft_bloom_key"
-    val bloom = existing.withColumn(keyStr, col(existingKey).cast("string"))
-      .stat.bloomFilter(keyStr, expectedKeys, fpp)
-    val bc = staging.sparkSession.sparkContext.broadcast(bloom)
-    val withKey = staging.withColumn(keyStr, col(stagingKey).cast("string"))
-    val probableHit = withKey
-      .filter(r => bc.value.mightContainString(r.getAs[String](keyStr)))
-      .drop(keyStr)
-    if (anti) {
-      // rows the bloom definitely rules out are new — no join needed for them
-      val definiteMiss = withKey
-        .filter(r => !bc.value.mightContainString(r.getAs[String](keyStr)))
-        .drop(keyStr)
-      definiteMiss.unionByName(
-        probableHit.join(existing, col(stagingKey) === col(existingKey), "left_anti"))
-    } else {
-      probableHit.join(existing, col(stagingKey) === col(existingKey), "left_semi")
-    }
-  }
-
   /** MISSING_REQUIRED_FIELD (issue.py:17): any of the required columns
     * null/blank. Pure predicate — stays in the scan stage. */
   def missingRequired(df: DataFrame, requiredCols: Seq[String]): DataFrame =

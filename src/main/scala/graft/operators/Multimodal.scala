@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multimodal column handling: media payloads ride along as opaque `binary`
@@ -12,11 +12,10 @@ import org.apache.spark.sql.functions._
   * (fast path, exact) plus `javax.imageio` for PNG/JPEG/GIF — ImageIO ships
   * in the JDK with zero native dependencies, so dims, mean RGB, dHash, and
   * resize all run on real codecs. PCM WAV audio decodes natively too. Only
-  * formats with no JDK codec (video, compressed audio) remain behind the
-  * declared stub boundary: `decodeStub` produces a deterministic fake
-  * feature vector, and swapping it for a JNI/codec call changes no plan
-  * shape — schema, partitioning, batch iteration, metadata plumbing are
-  * identical either way.
+  * formats with no JDK codec (video, compressed audio) have no decoder:
+  * the decoders return None / a sentinel row for them, never a task crash,
+  * and adding a JNI/codec call there changes no plan shape — schema,
+  * partitioning, batch iteration, metadata plumbing stay identical.
   */
 object Multimodal {
 
@@ -37,24 +36,6 @@ object Multimodal {
         (col(idCol) % 640 + 16).cast("int").as("width"),
         (col(idCol) % 480 + 16).cast("int").as("height"),
         (col(idCol) % 90000 + 1000).as("durationMs")).as("meta"))
-  }
-
-  /** STUB decode: deterministic 8-bucket byte histogram, L1-normalized —
-    * stands in for image/audio feature extraction. Batched per partition;
-    * the real implementation would decode `payload` with a codec here. */
-  def decodeStub(media: DataFrame, idCol: String): DataFrame = {
-    import media.sparkSession.implicits._
-    val ds: Dataset[(Long, Array[Byte])] =
-      media.select(col(idCol).cast("long"), col("payload")).as[(Long, Array[Byte])]
-    ds.mapPartitions { batch =>
-      batch.map { case (id, bytes) =>
-        val hist = new Array[Double](8)
-        var i = 0
-        while (i < bytes.length) { hist((bytes(i) & 0xff) >> 5) += 1.0; i += 1 }
-        val n = math.max(1.0, bytes.length.toDouble)
-        (id, hist.map(v => (v / n).toFloat))
-      }
-    }.toDF(idCol, "features")
   }
 
   // ------------------------------------------------------------ real decode
@@ -324,14 +305,6 @@ object Multimodal {
     }
   }
 
-  /** (id, dhash) per image — shuffle-free; undecodable payloads yield null. */
-  def imagePerceptualHashes(media: DataFrame, idCol: String): DataFrame = {
-    import media.sparkSession.implicits._
-    media.select(col(idCol).cast("long"), col("payload")).as[(Long, Array[Byte])]
-      .map { case (id, b) => (id, dHash64(b)) }
-      .toDF(idCol, "dhash")
-  }
-
   /** Near-duplicate IMAGE pairs by perceptual hash: dHash each payload
     * map-side, then reuse [[Dedup.hammingPairs64]]'s pigeonhole band join
     * (the simhash tail) — the multimodal member of the dedup family:
@@ -389,26 +362,11 @@ object Multimodal {
       maxBucket = math.max(n.toInt, 1024))
   }
 
-  /** Synthesize per-doc PATTERNED BMPs (gradients keyed by id % patterns):
-    * unlike [[synthesizeImages]]'s flat colors (degenerate for dHash —
-    * every flat image hashes to 0), these give each pattern key a distinct
-    * luma structure, and ids sharing a key produce IDENTICAL images — the
-    * planted near-dup groups the perceptual dedup should find. */
-  def synthesizePatternedImages(docs: DataFrame, idCol: String,
-                                size: Int = 16, patterns: Int = 40): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col(idCol).cast("long")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val k = (id % patterns).toInt
-        (id, encodeBmp(size, size, (x, y) =>
-          ((x * (k + 3)) % 256, (y * (k + 5)) % 256, ((x + y) * (k + 7)) % 256)))
-      }
-    }.toDF(idCol, "payload")
-  }
-
   /** Patterned synth with MIXED container formats: ids sharing id%patterns
-    * render the IDENTICAL pattern, but the container alternates BMP / PNG /
-    * JPEG by (id/patterns)%3 — so the planted near-dup groups cross the
+    * render the IDENTICAL pattern (unlike [[synthesizeImages]]' flat colors,
+    * which all dHash to 0, each pattern key has a distinct luma structure),
+    * but the container alternates BMP / PNG / JPEG by (id/patterns)%formats
+    * (formats = 1: BMP only) — so the planted near-dup groups cross the
     * format boundary. Only a DECODED-pixel perceptual hash can see those
     * pairs (file hashing and byte-level near-dup miss them by
     * construction); BMP and PNG decodes of the same pattern are
@@ -575,7 +533,8 @@ object Multimodal {
 
   /** Frame sampling for video rows: emit `n` evenly-spaced frame timestamps
     * per video — pure `sequence`/`explode`, no UDF, scales as a map-side
-    * expand. (The frame DECODE would be a decodeStub-style pass downstream.) */
+    * expand. (Decoding the frames would be a per-partition pass downstream,
+    * shaped like [[decodeImages]].) */
   def frameSample(media: DataFrame, idCol: String, n: Int): DataFrame =
     media.filter(col("meta.kind") === "video")
       .select(col(idCol), col("meta.durationMs").as("dur"),

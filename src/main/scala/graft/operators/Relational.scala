@@ -179,27 +179,44 @@ object Relational {
     * Spark's own runtime-filter machinery ([[graft.functions.Native
     * .bloomFilterAgg]] / `bloomMightContain`), driven explicitly so the
     * pruning fires even where the optimizer's injection heuristics
-    * (creationSideThreshold etc.) would decline. vs [[Issues
-    * .existingKeysAtScale]] (driver-built `stat.bloomFilter` probed by a row
-    * lambda): the build here is a distributed partial-merge aggregate and
-    * the probe is codegen'd right on top of the scan, keeping pruning +
-    * whole-stage codegen intact. Shuffle volume drops from |fact| to
-    * |matches| + fpp·|fact|; the exact semi join settles false positives.
-    * Build/probe are both `xxhash64(key)` longs — one canonical
-    * representation regardless of key type. */
+    * (creationSideThreshold etc.) would decline. The build is a distributed
+    * partial-merge aggregate and the probe is codegen'd right on top of the
+    * scan, keeping pruning + whole-stage codegen intact. Shuffle volume
+    * drops from |fact| to |matches| + fpp·|fact|; the exact semi join
+    * settles false positives.
+    *
+    * Build and probe both hash `xxhash64(key)`, and xxhash64 of an int, a
+    * long and a string spelling the same value all differ — so when the
+    * key types differ, both sides are cast to their ANSI wider type first,
+    * and keys with no common type fail loudly. That is the type the join
+    * comparison itself casts to: a string meeting a number compares as
+    * the number ("007" = 7) with ANSI on or off, where the non-ANSI
+    * widening would hash it as the string "007". Same-typed keys hash as
+    * they are. */
   def bloomPrunedSemiJoin(fact: DataFrame, dim: DataFrame,
                           factKey: String, dimKey: String,
                           expectedKeys: Long = 1000000L,
                           numBits: Long = 8388608L): DataFrame = {
     import graft.functions.Native
+    import org.apache.spark.sql.catalyst.analysis.AnsiTypeCoercion
+    val factType = fact.schema(factKey).dataType
+    val dimType = dim.schema(dimKey).dataType
+    val (factHashKey, dimHashKey) =
+      if (factType == dimType) (col(factKey), col(dimKey))
+      else {
+        val wider = AnsiTypeCoercion.findWiderTypeForTwo(factType, dimType)
+        require(wider.isDefined, s"bloomPrunedSemiJoin: keys $factKey " +
+          s"(${factType.sql}) and $dimKey (${dimType.sql}) have no common type")
+        (col(factKey).cast(wider.get), col(dimKey).cast(wider.get))
+      }
     val sketch = dim
-      .select(Native.bloomFilterAgg(xxhash64(col(dimKey)), expectedKeys, numBits)
+      .select(Native.bloomFilterAgg(xxhash64(dimHashKey), expectedKeys, numBits)
         .as("bf"))
       .head().getAs[Array[Byte]]("bf") // one binary blob — contract-small
     // the settle join keys the dim side under an internal alias so
     // factKey == dimKey (the common same-name join) resolves unambiguously
     val dimKeys = dim.select(col(dimKey).as("__graft_dim_key")).distinct()
-    fact.filter(Native.bloomMightContain(lit(sketch), xxhash64(col(factKey))))
+    fact.filter(Native.bloomMightContain(lit(sketch), xxhash64(factHashKey)))
       .join(dimKeys, col(factKey) === col("__graft_dim_key"), "left_semi")
   }
 

@@ -746,120 +746,17 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  /** PCA projection of an embedding column — dimensionality reduction before
-    * ANN / clustering / visualization (cheaper distance math, denser
-    * indexes). Classic two-pass distributed PCA with a driver-side
-    * eigensolve — right-sized because dim d is embedding-scale (64–4096):
-    *
-    *   pass 1: one typed partition scan accumulating (n, Σx, packed
-    *     upper-triangular Σxxᵀ) — O(d²) doubles per PARTITION cross the
-    *     wire (a few KB), never anything row-scaled;
-    *   driver: covariance from the moments, symmetric eigensolve via
-    *     breeze (ships in Spark's own classpath), top-k components
-    *     sign-canonicalized (largest-|component| entry made positive) so
-    *     the output is deterministic;
-    *   pass 2: map-side projection of each centered vector onto the
-    *     broadcast k×d components — no shuffle beyond the final ORDER BY.
-    *
-    * Returns (id, pc1..pck) scalar columns (driver-harness-friendly).
-    * Eigenvalue ordering/sign pinned by spec on planted anisotropic data. */
-  def pcaProject(embeddings: DataFrame, idCol: String, vecCol: String,
-                 k: Int): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val data = embeddings
-      .select(col(idCol).cast("long"),
-        transform(col(vecCol), x => x.cast("double")).as("v"))
-      .as[(Long, Array[Double])]
-    val moments = data.mapPartitions { it =>
-      var n = 0L
-      var d = -1
-      var s: Array[Double] = null
-      var g: Array[Double] = null
-      it.foreach { case (_, a) =>
-        if (d < 0) { d = a.length; s = new Array(d); g = new Array(d * (d + 1) / 2) }
-        require(a.length == d, s"ragged embedding: ${a.length} vs $d")
-        n += 1
-        var i = 0
-        var t = 0
-        while (i < d) {
-          s(i) += a(i)
-          var j = i
-          while (j < d) { g(t) += a(i) * a(j); t += 1; j += 1 }
-          i += 1
-        }
-      }
-      if (n == 0) Iterator.empty else Iterator.single((n, s, g))
-    }.collect()
-    require(moments.nonEmpty, "pcaProject: empty input")
-    val d = moments.head._2.length
-    val n = moments.map(_._1).sum.toDouble
-    val sum = new Array[Double](d)
-    val gram = new Array[Double](d * (d + 1) / 2)
-    moments.foreach { case (_, s, g) =>
-      var i = 0
-      while (i < d) { sum(i) += s(i); i += 1 }
-      i = 0
-      while (i < gram.length) { gram(i) += g(i); i += 1 }
-    }
-    val mu = sum.map(_ / n)
-    val cov = breeze.linalg.DenseMatrix.zeros[Double](d, d)
-    var t = 0
-    var i = 0
-    while (i < d) {
-      var j = i
-      while (j < d) {
-        val c = gram(t) / n - mu(i) * mu(j)
-        cov(i, j) = c; cov(j, i) = c
-        t += 1; j += 1
-      }
-      i += 1
-    }
-    val es = breeze.linalg.eigSym(cov) // eigenvalues ascending
-    val order = (0 until d).sortBy(c => -es.eigenvalues(c)).take(k)
-    val comps: Array[Array[Double]] = order.map { c =>
-      val v = Array.tabulate(d)(r => es.eigenvectors(r, c))
-      // sign canonicalization: the largest-|entry| coordinate (first on
-      // ties) is made positive — eigenvectors are otherwise sign-ambiguous
-      val m = v.indices.maxBy(r => (math.abs(v(r)), -r))
-      if (v(m) < 0) v.map(x => -x) else v
-    }.toArray
-    val bcComps = spark.sparkContext.broadcast(comps)
-    val bcMu = spark.sparkContext.broadcast(mu)
-    val kk = comps.length
-    val projected = data.mapPartitions { it =>
-      val cs = bcComps.value
-      val m = bcMu.value
-      it.map { case (id, a) =>
-        val p = new Array[Double](kk)
-        var c = 0
-        while (c < kk) {
-          var acc = 0.0
-          var r = 0
-          while (r < m.length) { acc += (a(r) - m(r)) * cs(c)(r); r += 1 }
-          p(c) = acc; c += 1
-        }
-        (id, p)
-      }
-    }.toDF(idCol, "p")
-    projected.select(
-        col(idCol) +: (0 until kk).map(c =>
-          element_at(col("p"), c + 1).cast("decimal(18,6)").cast("double")
-            .as(s"pc${c + 1}")): _*)
-      .orderBy(idCol)
-  }
-
-  /** Oracle-expressible PCA (the q223 path): top-k components by UNROLLED
-    * quantized power iteration + Hotelling deflation instead of
-    * [[pcaProject]]'s driver eigensolve — the SAME capability (one SURVEY
-    * §2 row), traded exact-eigen for a fixed-step computation every engine
-    * can replay bit-for-bit in SQL CTEs:
+  /** PCA projection of an embedding column (the q223 path) —
+    * dimensionality reduction before ANN / clustering / visualization
+    * (cheaper distance math, denser indexes). Top-k components by UNROLLED
+    * quantized power iteration + Hotelling deflation rather than an exact
+    * eigensolve: a fixed-step computation every engine can replay
+    * bit-for-bit in SQL CTEs. Returns (id, pc1..pck) scalar columns:
     *
     *   pass 1 (distributed): exact fixed-point moments — per-dim sums of
     *     round(x·1e9) and upper-triangular pair sums of round(x_i·x_j·1e9)
-    *     as BIGINTs. The pair explode emits d(d+1)/2 terms per row into a
-    *     hash aggregate whose KEY SPACE is d² (bounded), so map-side
-    *     combine caps the shuffle at partitions×d² rows — never row-scaled;
+    *     as BIGINTs, folded into one d²-sized long array per partition and
+    *     tree-reduced to the driver — never row-scaled;
     *   driver (d²-bounded metadata fold, the partition-sketch contract):
     *     covariance entries quantized to 1e12 fixed-point, then `iters`
     *     power-iteration matvecs per component with every term rounded
@@ -874,9 +771,10 @@ object Similarity {
     * Every intermediate is an exact integer or a correctly-rounded
     * rational (BIGINT / power of ten), so the unrolled SQL oracle matches
     * hash-exactly. `iters` fixed ⇒ the output is an APPROXIMATION of the
-    * eigenbasis (documented; [[pcaProject]] is the exact-eigen variant) —
-    * for variance-dominant components 3 steps is plenty, and agreement is
-    * exact by construction regardless. */
+    * eigenbasis, scaled by each component's pivot rather than unit-norm —
+    * for variance-dominant components 3 steps is plenty (SimilaritySpec
+    * pins a planted line), and agreement is exact by construction
+    * regardless. */
   def pcaPowerProject(embeddings: DataFrame, idCol: String, vecCol: String,
                       k: Int = 2, iters: Int = 3): DataFrame = {
     require(k >= 1 && k <= 8 && iters >= 1 && iters <= 6,

@@ -295,16 +295,22 @@ class CurationSpec extends SparkSpec {
     assert(Curation.segmentGreedy("a", rank).toSeq == Seq("a"))
   }
 
-  test("bpeTrain: known-answer merge sequence; encode compresses accordingly") {
+  test("bpeTrainBatched: known-answer merge sequence; encode compresses accordingly") {
     // corpus: 'abab' ×3, 'abc' ×2 → round 1 pair (a,b) count 8;
     // round 2: symbols ab|ab ×3, ab|c ×2 → (ab,ab)=3 beats (ab,c)=2;
     // round 3: (ab,c)=2
     val df = Seq((1L, "abab abab abab abc"), (2L, "abc")).toDF("doc_id", "text")
-    val m = Curation.bpeTrain(df, "text", 3).orderBy("rank").collect()
+    val m = Curation.bpeTrainBatched(df, "text", 3).orderBy("rank").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
     assert(m.toSeq == Seq((1, "a", "b", 8L), (2, "ab", "ab", 3L), (3, "ab", "c", 2L)), m.toSeq)
+    assert(SparkEntry.bpeSequentialReference(Seq("abab abab abab abc", "abc"), 3)._1 ==
+      m.map(x => (x._2, x._3, x._4)).toList)
     // fewer merges than distinct pairs available → stops when exhausted
-    assert(Curation.bpeTrain(df, "text", 99).count() <= 4)
+    val capped = Curation.bpeTrainBatched(df, "text", 99).orderBy("rank").collect()
+      .map(r => (r.getString(1), r.getString(2), r.getLong(3))).toList
+    assert(capped.length <= 4, capped)
+    assert(capped == SparkEntry.bpeSequentialReference(
+      Seq("abab abab abab abc", "abc"), 99)._1, capped)
     val enc = Curation.bpeEncode(df, "doc_id", "text",
         m.map(x => (x._2, x._3)).toSeq)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -313,26 +319,25 @@ class CurationSpec extends SparkSpec {
     assert(enc(2L) == ((1L, 3L)))
   }
 
-  test("bpeTrainBatched ≡ bpeTrain: identical merge lists on the known-answer " +
-    "corpus, an interacting corpus, and real text") {
+  test("bpeTrainBatched is batch-size-invariant: batchK 1, 4 and 128 learn " +
+    "identical merge lists on the known-answer corpus, an interacting corpus, and real text") {
+    // batchK = 1 is the one-merge-per-round schedule; at batchK = 4 the
+    // collect is usually full, so the K-th-count bound (cK > 0) binds
+    def lists(df: org.apache.spark.sql.DataFrame, n: Int): Seq[Seq[Seq[Any]]] =
+      Seq(1, 4, 128).map(k => Curation.bpeTrainBatched(df, "text", n, batchK = k)
+        .orderBy("rank").collect().map(_.toSeq).toSeq)
     // the known-answer corpus (every round interacts: ab feeds abab/abc) —
     // batching must degrade to prefix-of-1 and still match exactly
-    val ka = Seq((1L, "abab abab abab abc"), (2L, "abc")).toDF("doc_id", "text")
-    val seqKa = Curation.bpeTrain(ka, "text", 3).orderBy("rank").collect().map(_.toSeq)
-    val batKa = Curation.bpeTrainBatched(ka, "text", 3).orderBy("rank").collect().map(_.toSeq)
-    assert(seqKa.toSeq == batKa.toSeq, s"known-answer diverged: ${batKa.toSeq}")
+    val ka = lists(Seq((1L, "abab abab abab abc"), (2L, "abc")).toDF("doc_id", "text"), 3)
+    assert(ka.distinct.length == 1, s"known-answer diverged: $ka")
     // adversarial interaction: same-symbol runs, shared chars, output
     // collisions across rounds (ab + c vs a + bc tie shapes)
-    val adv = Seq((1L, "aaaa aab abb bba bab abc bca cab aaaa aab"),
-      (2L, "abc abc bba aab aaaa")).toDF("doc_id", "text")
-    val seqAdv = Curation.bpeTrain(adv, "text", 8).orderBy("rank").collect().map(_.toSeq)
-    val batAdv = Curation.bpeTrainBatched(adv, "text", 8).orderBy("rank").collect().map(_.toSeq)
-    assert(seqAdv.toSeq == batAdv.toSeq, s"adversarial diverged: ${batAdv.toSeq}")
+    val adv = lists(Seq((1L, "aaaa aab abb bba bab abc bca cab aaaa aab"),
+      (2L, "abc abc bba aab aaaa")).toDF("doc_id", "text"), 8)
+    assert(adv.distinct.length == 1, s"adversarial diverged: $adv")
     // real text: documents sf0.001, 10 merges
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(200)
-    val seqD = Curation.bpeTrain(docs, "text", 10).orderBy("rank").collect().map(_.toSeq)
-    val batD = Curation.bpeTrainBatched(docs, "text", 10).orderBy("rank").collect().map(_.toSeq)
-    assert(seqD.toSeq == batD.toSeq, s"sf0.001 diverged: ${batD.toSeq}")
+    val d = lists(Tables.documents(spark, "/root/testdata/sf0.001").limit(200), 10)
+    assert(d.distinct.length == 1 && d.head.length == 10, s"sf0.001 diverged: $d")
   }
 
   test("oracle-harness sequential BPE ≡ engine trainer + encoder (the q221/" +
@@ -341,10 +346,10 @@ class CurationSpec extends SparkSpec {
     // implementation that pins the q221/q222 DuckDB constants — this test
     // is the cross-implementation equivalence that makes a divergence in
     // EITHER implementation a loud verify failure, on the same three
-    // corpora the batched-trainer equivalence is pinned on
+    // corpora the batch-size invariance is pinned on
     def check(rows: Seq[(Long, String)], nMerges: Int): Unit = {
       val df = rows.toDF("doc_id", "text")
-      val engine = Curation.bpeTrain(df, "text", nMerges).orderBy("rank")
+      val engine = Curation.bpeTrainBatched(df, "text", nMerges).orderBy("rank")
         .collect().map(r => (r.getString(1), r.getString(2), r.getLong(3))).toSeq
       val (refMerges, refNs) =
         SparkEntry.bpeSequentialReference(rows.map(_._2), nMerges)
@@ -409,8 +414,9 @@ class CurationSpec extends SparkSpec {
     val batJobs = countJobs {
       bat = Curation.bpeTrainBatched(df, "text", 13).orderBy("rank").collect().map(_.toSeq).toSeq
     }
-    val seqJobs = countJobs {
-      sq = Curation.bpeTrain(df, "text", 13).orderBy("rank").collect().map(_.toSeq).toSeq
+    val seqJobs = countJobs { // batchK = 1: one merge per round
+      sq = Curation.bpeTrainBatched(df, "text", 13, batchK = 1).orderBy("rank")
+        .collect().map(_.toSeq).toSeq
     }
     assert(bat == sq, s"disjoint corpus diverged: $bat vs $sq")
     assert(bat.length == 13)
@@ -438,8 +444,8 @@ class CurationSpec extends SparkSpec {
       bat = Curation.bpeTrainBatched(docs, "text", 30).orderBy("rank")
         .collect().map(_.toSeq).toSeq
     }
-    val seqJobs = countJobs {
-      sq = Curation.bpeTrain(docs, "text", 30).orderBy("rank")
+    val seqJobs = countJobs { // batchK = 1: one merge per round
+      sq = Curation.bpeTrainBatched(docs, "text", 30, batchK = 1).orderBy("rank")
         .collect().map(_.toSeq).toSeq
     }
     assert(bat == sq, s"real-text 30-merge diverged")

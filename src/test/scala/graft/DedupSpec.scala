@@ -66,23 +66,33 @@ class DedupSpec extends SparkSpec {
     val nearDup = base.replace("lazy", "sleepy")
     val far = "numbers 111 222 333 444 555 666 777 888 999 000 aaa bbb ccc ddd eee fff"
     val df = Seq((1L, base), (2L, base), (3L, nearDup), (4L, far)).toDF("doc_id", "text")
-    val pairs = Dedup.simhashPairs(df, "doc_id", "text", maxHamming = 10).collect()
+    val pairs = Dedup.simhashPairsPortable(df, "doc_id", "text", maxHamming = 10).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
+    // the band join reports exactly the signature distance, and emits
+    // every pair within the radius and nothing beyond it
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val sig = df.as[(Long, String)].collect()
+      .map { case (id, t) => id -> Dedup.simhashMd5(t, md) }.toMap
+    val truth = (for (a <- sig.keys; b <- sig.keys if a < b;
+                      d = java.lang.Long.bitCount(sig(a) ^ sig(b)) if d <= 10)
+      yield (a, b) -> d).toMap
+    assert(pairs == truth, s"$pairs vs $truth")
     assert(pairs((1L, 2L)) == 0)
     assert(pairs.get((1L, 3L)).exists(_ <= 10))
     assert(!pairs.keySet.exists(k => k._1 == 4L || k._2 == 4L))
   }
 
-  test("simhashPairs: recall holds for maxHamming > 3 (banding widens with the radius)") {
+  test("simhashPairsPortable: recall holds for maxHamming > 3 (banding widens with the radius)") {
     // force two signatures at an exact known Hamming distance by planting
     // ids whose simhashes we compute directly, then verify the pair surfaces
     val a = "alpha beta gamma delta epsilon zeta eta theta"
     // flipping words changes several bits; measure the true distance first
-    val b = "alpha beta gamma delta epsilon zeta eta iota"
-    val d = java.lang.Long.bitCount(Dedup.simhash64(a) ^ Dedup.simhash64(b))
-    assume(d > 3 && d <= 20, s"need a mid-distance pair, got $d") // text pair chosen to land here
+    val b = "alpha beta gamma delta epsilon zeta eta kappa"
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val d = java.lang.Long.bitCount(Dedup.simhashMd5(a, md) ^ Dedup.simhashMd5(b, md))
+    assert(d > 3 && d <= 20, s"need a mid-distance pair, got $d") // text pair chosen to land here (d = 8)
     val df = Seq((1L, a), (2L, b)).toDF("doc_id", "text")
-    val pairs = Dedup.simhashPairs(df, "doc_id", "text", maxHamming = d).collect()
+    val pairs = Dedup.simhashPairsPortable(df, "doc_id", "text", maxHamming = d).collect()
     assert(pairs.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L && r.getInt(2) == d),
       s"pair at hamming $d missing: ${pairs.mkString(",")}")
   }

@@ -20,16 +20,6 @@ class MultimodalSpec extends SparkSpec {
     assert(meta.getInt(1) >= 16 && meta.getInt(2) >= 16 && meta.getLong(3) >= 1000)
   }
 
-  test("decodeStub: deterministic, normalized 8-bucket features") {
-    val media = Multimodal.attachBinary(docs, "doc_id", "text")
-    val f1 = Multimodal.decodeStub(media, "doc_id").orderBy("doc_id").collect()
-    val f2 = Multimodal.decodeStub(media, "doc_id").orderBy("doc_id").collect()
-    val feats = f1(0).getAs[scala.collection.Seq[Float]]("features")
-    assert(feats.length == 8)
-    assert(math.abs(feats.map(_.toDouble).sum - 1.0) < 1e-5) // L1-normalized
-    assert(f1.map(_.toString).toSeq == f2.map(_.toString).toSeq) // deterministic
-  }
-
   test("BMP round-trip: synthesized images decode to exact dims and colors") {
     val imgs = Multimodal.synthesizeImages(docs, "doc_id", size = 8)
     val feats = Multimodal.decodeImages(imgs, "doc_id").orderBy("doc_id").collect()
@@ -144,10 +134,12 @@ class MultimodalSpec extends SparkSpec {
     assert(pairs.keySet == Set((1L, 2L), (1L, 3L), (2L, 3L)), pairs.toString)
     assert(pairs((1L, 2L)) == 0)
     assert(pairs((1L, 3L)) >= 1 && pairs((1L, 3L)) <= 2)
-    // planted groups via the patterned synthesizer: ids 0,40,80 share a key
+    // planted groups via the patterned synthesizer (BMP only): ids 0,40,80
+    // share a key
     val docs = (0L until 120L).toDF("doc_id")
     val planted = Multimodal.imageNearDupPairs(
-      Multimodal.synthesizePatternedImages(docs, "doc_id"), "doc_id", maxHamming = 0)
+      Multimodal.synthesizeMixedImages(docs, "doc_id", formats = 1), "doc_id",
+      maxHamming = 0)
     val grouped = planted.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(grouped.contains((0L, 40L)) && grouped.contains((40L, 80L)))
   }

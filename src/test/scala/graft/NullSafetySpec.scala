@@ -50,7 +50,7 @@ class NullSafetySpec extends SparkSpec {
   test("dedup ops: null text rows don't kill the job") {
     assert(Dedup.exact(docs, "doc_id", "text").count() >= 2)
     Dedup.minhashLsh(docs.select("doc_id", "text"), "doc_id", "text").count() // no throw
-    Dedup.simhashPairs(docs.select("doc_id", "text"), "doc_id", "text").count() // no throw
+    Dedup.simhashPairsPortable(docs.select("doc_id", "text"), "doc_id", "text").count() // no throw
   }
 
   test("similarity ops: null embedding rows are skipped, not fatal") {

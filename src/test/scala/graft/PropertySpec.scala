@@ -39,7 +39,8 @@ class PropertySpec extends AnyFunSuite {
 
   test("simhash: identical text → distance 0; hamming is symmetric and bounded") {
     check(Prop.forAll(text, text) { (t1, t2) =>
-      val h1 = Dedup.simhash64(t1); val h2 = Dedup.simhash64(t2)
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val h1 = Dedup.simhashMd5(t1, md); val h2 = Dedup.simhashMd5(t2, md)
       val d = java.lang.Long.bitCount(h1 ^ h2)
       d >= 0 && d <= 64 && (t1 != t2 || d == 0) &&
         java.lang.Long.bitCount(h2 ^ h1) == d

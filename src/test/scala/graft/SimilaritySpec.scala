@@ -359,24 +359,28 @@ class SimilaritySpec extends SparkSpec {
     assert(m(1L) < 0.5, m.toString) // the stray's negative s pulls the mean
   }
 
-  test("pcaProject: recovers the planted principal direction, sign-canonical, partition-invariant") {
+  test("pcaPowerProject: recovers the planted principal direction, sign-canonical, partition-invariant") {
     // points along direction (3,4)/5 in 3-d with tiny orthogonal jitter:
     // PC1 must align with the line; PC2/PC3 carry only the jitter
     val pts = (-10 to 10).map { t =>
       (t + 10L, Array(3f * t, 4f * t, if (t % 2 == 0) 0.01f else -0.01f))
     }.toDF("vec_id", "embedding")
-    val out = Similarity.pcaProject(pts, "vec_id", "embedding", 3)
+    val iters = 1 // the smallest step count that recovers the line; q223 runs 3
+    val out = Similarity.pcaPowerProject(pts, "vec_id", "embedding", k = 3, iters = iters)
       .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2), r.getDouble(3)))).toMap
-    // t and pc1 perfectly correlated: pc1(t) = 5t under the canonical sign
+    // t and pc1 perfectly correlated: components are pivot-normalized (the
+    // max-|entry| is +1), so PC1 = (0.75, 1, 0) and pc1(t) = 6.25t under the
+    // canonical sign
     (-10 to 10).foreach { t =>
-      assert(math.abs(out(t + 10L)._1 - 5.0 * t) < 0.01, s"t=$t -> ${out(t + 10L)}")
-      assert(math.abs(out(t + 10L)._2) < 0.02) // jitter only
-      assert(math.abs(out(t + 10L)._3) < 0.02)
+      assert(math.abs(out(t + 10L)._1 - 6.25 * t) < 0.01, s"t=$t -> ${out(t + 10L)}")
+      assert(math.abs(out(t + 10L)._2) < 0.02, s"t=$t -> ${out(t + 10L)}") // jitter only
+      assert(math.abs(out(t + 10L)._3) < 0.02, s"t=$t -> ${out(t + 10L)}")
     }
-    // deterministic under repartition (typed passes are layout-independent)
-    val p = Similarity.pcaProject(pts.repartition(7), "vec_id", "embedding", 2)
-      .collect().map(_.toSeq)
-    val q = Similarity.pcaProject(pts, "vec_id", "embedding", 2)
+    // deterministic under repartition (the integer moment folds are
+    // layout-independent)
+    val p = Similarity.pcaPowerProject(pts.repartition(7), "vec_id", "embedding",
+      k = 2, iters = iters).collect().map(_.toSeq)
+    val q = Similarity.pcaPowerProject(pts, "vec_id", "embedding", k = 2, iters = iters)
       .collect().map(_.toSeq)
     assert(p.toSeq == q.toSeq)
   }
